@@ -59,14 +59,18 @@ object Bench {
       .agg(sum(col("inter"))).collect()
   }
 
+  /** Free one query's distributed state: cache() entries, swept
+    * localCheckpoint blocks, and the cross-query eval cache that holds
+    * executor blocks. */
+  private[graft] def releaseQueryState(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    StateRegistry.sweep(spark)
+    graft.operators.Similarity.dropDistributedEvalState()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.localSession()
       // 141 distinct plans x ~2-10 codegen units each blow far past
       // the default 100-entry generated-class cache; iterative
       // queries (dedup_clusters' per-round plans) then evict every
@@ -126,9 +130,7 @@ object Bench {
       // query shares distributed state with another by design — the
       // one cross-query cache holding executor blocks is dropped in
       // the same breath (see Similarity.dropDistributedEvalState).
-      spark.sharedState.cacheManager.clearCache()
-      graft.StateRegistry.sweep(spark)
-      graft.operators.Similarity.dropDistributedEvalState()
+      releaseQueryState(spark)
       // Force reference processing NOW: a checkpoint/shuffle-heavy
       // query (dedup_clusters runs ~10 jobs with per-round
       // checkpoints) leaves hundreds of dead shuffle/RDD/broadcast

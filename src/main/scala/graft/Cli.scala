@@ -70,13 +70,7 @@ object Cli {
       s"--include-empty only applies to extract-chat-qa, not $name")
     val name0 = if (name == "extract-chat-qa" && flags.contains("include-empty"))
       "etl_qa_extract" else name
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, name0, sfDir, outPath, format, singleFile, delayMs)
     finally spark.stop()

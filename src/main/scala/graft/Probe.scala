@@ -1,143 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev-only scratch main: per-query timing and plan inspection at
-  * sf0.1. `runMain graft.Probe times q1 q2 ...` or
-  * `runMain graft.Probe explain <query>`.
+/** Dev-only plan and job inspection for any registered query at the
+  * dataset in `SPARK_GRAFT_SF_DIR` (default sf0.1):
+  *
+  *  - `runMain graft.Probe knjobs <query>`: per-job wall breakdown of
+  *    one query's second run (scheduled-job count is the structural
+  *    signal behind most fixed-cost cuts).
+  *  - `runMain graft.Probe explainall <outDir> [queries...]`: writes
+  *    `.explain("formatted")` of every query (or the given subset) to
+  *    `<outDir>/<query>.txt`, the capture `plans/` is built from.
+  *
+  * Timing A/B comparisons are the Bench subset run
+  * (`SPARK_GRAFT_ONLY=<q>,zz_<q>_old runMain graft.Bench`); per-stage
+  * statistics for the benchmark workloads come from perfbench's traced
+  * run.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val b0 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev-only: SPARK_GRAFT_EVENTLOG=<dir> dumps the event log for
-    // per-stage timing forensics (the forked JVM ignores sbt -J flags)
-    val spark = sys.env.get("SPARK_GRAFT_EVENTLOG").fold(b0)(dir =>
-      b0.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", dir))
-      .getOrCreate()
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // dev-only: SPARK_GRAFT_CONF="k=v;k=v" applies runtime SQL confs
-    // before the warmup — for A/B-ing candidate session settings
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-        println(s"[probe] conf ${k.trim}=${v.trim}")
-      })
-    // shared engine warmup (see Bench.warmup): probe first-run numbers
-    // should measure per-plan costs, not interpreter/C2 compilation
+    // shared engine warmup: first-run numbers should measure per-plan
+    // costs, not interpreter/C2 compilation
     Bench.warmup(spark)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    def time(name: String)(f: => Long): Unit = {
+    def run(q: String, pass: String): Unit = {
       val t0 = System.nanoTime()
-      val n = f
-      println(f"[probe] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
+      SparkEntry.queries(q)(spark, d).write.format("noop").mode("overwrite").save()
+      println(f"[probe] $q%-28s $pass%-8s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
     args.toList match {
-      case "ssebits" :: Nil =>
-        import org.apache.spark.sql.functions._
-        val ev = graft.sources.Tables.events(spark, d)
-        val raw = concat_ws("\n",
-          lit("event: message"),
-          concat(lit("""data: {"code": 0, "data": {"answer": "partial """), col("event_id"), lit(""""}}""")),
-          lit("""data: {"code": 1, "message": "transient error"}"""),
-          concat(lit("""data: {"code": 0, "data": {"answer": "final """), col("event_id"),
-            lit("""", "session_id": "sess-"""), col("user_id"), lit(""""}}""")),
-          lit("data: [DONE]"))
-        val base = ev.select(col("event_id"), raw.as("raw"))
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        time("raw only") { noop(base) }
-        time("raw only x2") { noop(base) }
-        val lines = base.select(col("event_id"), posexplode(split(col("raw"), "\n")).as(Seq("line_no", "l")))
-          .filter(col("l").startsWith("data:"))
-        time("lines") { noop(lines) }
-        time("lines x2") { noop(lines) }
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "code INT, data STRUCT<answer: STRING, session_id: STRING, reference: STRUCT<total: BIGINT>>")
-        val parsed = lines.select(col("event_id"), col("line_no"),
-          from_json(trim(expr("substring(l, 6)")), schema).as("p"))
-        time("parsed") { noop(parsed) }
-        time("parsed x2") { noop(parsed) }
-        val aggd = parsed
-          .filter(col("p.code") === 0 && col("p.data").isNotNull)
-          .groupBy(col("event_id"))
-          .agg(max(when(col("p.data.answer").isNotNull,
-            struct(col("line_no"), col("p.data.answer").as("v")))).as("a"))
-        time("aggd") { noop(aggd) }
-        time("aggd x2") { noop(aggd) }
-      case "ssebits2" :: Nil =>
-        import org.apache.spark.sql.functions._
-        val ev = graft.sources.Tables.events(spark, d)
-        val line2 = when(col("event_id") % 2 === 0,
-          concat(lit("""data: {"code": 0, "data": {"answer": "final """), col("event_id"),
-            lit("""", "session_id": "sess-"""), col("user_id"),
-            lit("""", "reference": {"total": """),
-            regexp_extract(col("props"), ":\\s*(\\d+)", 1), lit("}}}")))
-          .otherwise(concat(lit("""data: {"code": 0, "data": {"answer": "final """),
-            col("event_id"), lit("""", "session_id": "sess-"""), col("user_id"), lit(""""}}""")))
-        val raw = concat_ws("\n",
-          lit("event: message"),
-          concat(lit("""data: {"code": 0, "data": {"answer": "partial """), col("event_id"), lit(""""}}""")),
-          lit("""data: {"code": 1, "message": "transient error"}"""),
-          line2, lit("data: [DONE]"))
-        val base = ev.select(col("event_id"), col("user_id"), col("props"))
-          .repartition(32, col("event_id"))
-          .select(col("event_id"), raw.as("raw"))
-        def noop2(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        time("base") { noop2(base) }
-        time("base x2") { noop2(base) }
-        val lines = base.select(col("event_id"), posexplode(split(col("raw"), "\n")).as(Seq("line_no", "l")))
-          .filter(col("l").startsWith("data:"))
-        time("lines") { noop2(lines) }
-        time("lines x2") { noop2(lines) }
-        val schema2 = org.apache.spark.sql.types.StructType.fromDDL(
-          "code INT, data STRUCT<answer: STRING, session_id: STRING, reference: STRUCT<total: BIGINT>>")
-        val parsed0 = lines.select(col("event_id"), col("line_no"),
-          from_json(trim(expr("substring(l, 6)")), schema2).as("p"))
-        time("parsed") { noop2(parsed0) }
-        time("parsed x2") { noop2(parsed0) }
-        val withBarrier = parsed0.repartition(32, col("event_id"))
-          .filter(col("p.code") === 0 && col("p.data").isNotNull)
-        time("barrier+filter") { noop2(withBarrier) }
-        time("barrier+filter x2") { noop2(withBarrier) }
-        val aggd2 = withBarrier.groupBy(col("event_id")).agg(
-          max_by(col("p.data.answer"), when(col("p.data.answer").isNotNull, col("line_no"))).as("a"),
-          max_by(col("p.data.session_id"), when(col("p.data.session_id").isNotNull, col("line_no"))).as("s"),
-          max_by(col("p.data.reference.total"), when(col("p.data.reference.total").isNotNull, col("line_no"))).as("t"))
-        time("aggd") { noop2(aggd2) }
-        time("aggd x2") { noop2(aggd2) }
-      case "ab" :: reps :: qs =>
-        // interleaved A/B of registered queries in ONE JVM (cross-JVM
-        // host noise is ±30% at these durations)
-        for (rep <- 1 to reps.toInt; q <- qs) {
-          time(s"$q #$rep") {
-            SparkEntry.queries(q)(spark, d).write.format("noop").mode("overwrite").save(); 0L
-          }
-          // full Bench-parity hygiene: without the gc, per-round
-          // checkpoint/shuffle reference debt from one rep stalls the
-          // next (measured here: 16 -> 51 -> 57 s across reps of
-          // dedup_clusters_incremental without it)
-          spark.sharedState.cacheManager.clearCache()
-          StateRegistry.sweep(spark)
-          graft.operators.Similarity.dropDistributedEvalState()
-          System.gc()
-        }
       case "knjobs" :: q :: Nil =>
-        // per-job wall breakdown for one query (dev forensics).
         // Warm-run first (plan-specific janino/C2 compiles land outside
-        // the instrumented run), sweep state, then instrument run 2.
-        time(s"$q warmrun") {
-          SparkEntry.queries(q)(spark, d).write.format("noop").mode("overwrite").save(); 0L
-        }
-        spark.sharedState.cacheManager.clearCache()
-        StateRegistry.sweep(spark)
-        graft.operators.Similarity.dropDistributedEvalState()
+        // the instrumented run), release its state, then instrument run 2.
+        run(q, "warmrun")
+        Bench.releaseQueryState(spark)
         val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
         val done = new scala.collection.mutable.ArrayBuffer[(Int, Double, String)]()
         val l = new org.apache.spark.scheduler.SparkListener {
@@ -152,512 +48,15 @@ object Probe {
           }
         }
         spark.sparkContext.addSparkListener(l)
-        time(s"$q full") {
-          SparkEntry.queries(q)(spark, d).write.format("noop").mode("overwrite").save(); 0L
-        }
+        run(q, "measured")
         Thread.sleep(500)
         spark.sparkContext.removeSparkListener(l)
         done.synchronized { done.sortBy(_._1).toVector }.foreach { case (id, s, st) =>
           println(f"[probe] job $id%3d ${s}%7.2f s  $st")
         }
-      case "explain" :: q :: Nil =>
-        SparkEntry.queries(q)(spark, d).explain("formatted")
-      case "explainrt" :: q :: Nil =>
-        // final adaptive plan AFTER execution (shows runtime reuse)
-        val df = SparkEntry.queries(q)(spark, d)
-        df.write.format("noop").mode("overwrite").save()
-        println(df.queryExecution.executedPlan.toString)
-      case "codegen" :: q :: Nil =>
-        import org.apache.spark.sql.execution.debug._
-        val code = SparkEntry.queries(q)(spark, d).queryExecution.debug.codegenToSeq()
-        code.zipWithIndex.foreach { case ((_, c, _), i) =>
-          println(s"[probe] subtree $i: ${c.length} chars")
-        }
-        println(s"[probe] total ${code.map(_._2.length).sum} chars in ${code.size} subtrees")
-      case "codegensrc" :: q :: i :: Nil =>
-        import org.apache.spark.sql.execution.debug._
-        val code = SparkEntry.queries(q)(spark, d).queryExecution.debug.codegenToSeq()
-        println(code(i.toInt)._2)
-      case "judgebits" :: Nil =>
-        import org.apache.spark.sql.functions._
-        val ev = graft.sources.Tables.events(spark, d)
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val base = ev.select(col("event_id"),
-          concat(lit("judge says: "), col("props"), lit(" -- end")).as("raw"))
-        time("scan+concat") { noop(base) }
-        time("scan+concat x2") { noop(base) }
-        val re = base.select(col("event_id"),
-          regexp_extract(col("raw"), "\\{.*\\}", 0).as("judge_json"))
-        time("regexp") { noop(re) }
-        time("regexp x2") { noop(re) }
-        val gj = re.select(col("event_id"), col("judge_json"),
-          get_json_object(col("judge_json"), "$.k").cast("long").as("k"))
-        time("get_json") { noop(gj) }
-        time("get_json x2") { noop(gj) }
-        time("sorted") { noop(gj.orderBy(col("event_id"))) }
-        time("sorted x2") { noop(gj.orderBy(col("event_id"))) }
-      case "clbits" :: Nil =>
-        import org.apache.spark.sql.functions._
-        val pairs = graft.operators.Dedup.dedupNgramJaccard(spark, d)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint()
-        println(s"[clbits] pairs=${pairs.count()}")
-        val edges = pairs.union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-          .toDF("src", "dst").localCheckpoint()
-        var labels = edges.select(col("src").as("doc_id")).distinct()
-          .withColumn("label", col("doc_id"))
-        var changed = 1L
-        var rounds = 0
-        while (changed > 0 && rounds < 20) {
-          val t0 = System.nanoTime()
-          val prop = edges.join(labels, col("dst") === col("doc_id"))
-            .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-          val next = labels.join(prop, col("doc_id") === col("src"), "left")
-            .select(col("doc_id"), col("label").as("old"),
-              least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-            .localCheckpoint()
-          changed = next.filter(col("label") =!= col("old")).count()
-          labels = next.select(col("doc_id"), col("label"))
-          rounds += 1
-          println(f"[clbits] round $rounds changed=$changed ${(System.nanoTime()-t0)/1e9}%.2f s")
-        }
-      case "shbits" :: Nil =>
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        for (i <- 1 to 3) {
-          time(s"shingled noop $i") { noop(graft.operators.Dedup.shingled(spark, d)) }
-          time(s"shingled ckpt $i") { graft.operators.Dedup.shingled(spark, d).localCheckpoint(); 0L }
-        }
-      case "jacbits" :: Nil =>
-        import org.apache.spark.sql.functions._
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        time("checkpoint") { graft.operators.Dedup.shingled(spark, d).localCheckpoint(); 0L }
-        val sh = graft.operators.Dedup.shingled(spark, d).localCheckpoint()
-        val ex = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        time("explode") { noop(ex) }
-        val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("s"))
-        val capped = ex.withColumn("df", count(lit(1)).over(wDf))
-          .filter(col("df") <= graft.operators.Dedup.DfCap)
-          .select(col("doc_id"), col("s"))
-        time("window+filter") { noop(capped) }
-        val cand = capped.hint("merge").as("a").join(capped.as("b"),
-            col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        time("selfjoin") { noop(cand) }
-        val dd = cand.dropDuplicates("doc_a", "doc_b")
-        time("dropdup") { noop(dd) }
-        time("verify") { noop(graft.operators.Dedup.verifyExactJaccard(dd, sh)) }
-        time("full-again") { noop(graft.operators.Dedup.dedupNgramJaccard(spark, d)) }
-      case "jacbits2" :: Nil =>
-        import org.apache.spark.sql.functions._
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val sh = graft.operators.Dedup.shingled(spark, d).localCheckpoint()
-        val dd = graft.operators.Dedup.dedupNgramJaccard(spark, d)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint()
-        def verify(c: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-          val j1 = c(dd).join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-          val j2 = c(j1).join(sh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
-          j2.withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-            .withColumn("jaccard", round(col("inter") / (size(col("sha")) + size(col("shb")) - col("inter")), 4))
-            .filter(col("jaccard") >= 0.5)
-            .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        }
-        time("verify-merge") { noop(verify(_.hint("merge"))) }
-        time("verify-merge x2") { noop(verify(_.hint("merge"))) }
-        time("verify-nohint") { noop(verify(identity)) }
-        time("verify-nohint x2") { noop(verify(identity)) }
-        time("verify-shj") { noop(verify(_.hint("shuffle_hash"))) }
-        time("verify-shj x2") { noop(verify(_.hint("shuffle_hash"))) }
-        time("verify-merge-sorted") { noop(verify(_.hint("merge")).orderBy(col("doc_a"), col("doc_b"))) }
-      case "jacbits3" :: Nil =>
-        import org.apache.spark.sql.functions._
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        def full(ckptCand: Boolean): org.apache.spark.sql.DataFrame = {
-          val sh = graft.operators.Dedup.shingled(spark, d).localCheckpoint()
-          val ex = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-          val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("s"))
-          val capped = ex.withColumn("df", count(lit(1)).over(wDf))
-            .filter(col("df") <= graft.operators.Dedup.DfCap)
-            .select(col("doc_id"), col("s"))
-          val cand0 = capped.hint("merge").as("a").join(capped.as("b"),
-              col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-            .dropDuplicates("doc_a", "doc_b")
-          val cand = if (ckptCand) cand0.localCheckpoint() else cand0
-          graft.operators.Dedup.verifyExactJaccard(cand, sh)
-        }
-        for (i <- 1 to 3) {
-          time(s"full-nockpt $i") { noop(full(false)) }
-          time(s"full-ckpt $i") { noop(full(true)) }
-        }
-      case "annstats" :: rest =>
-        import org.apache.spark.sql.functions._
-        val sfd = rest.headOption.getOrElse(d)
-        val bf = graft.operators.Similarity.annBruteforceTopk(spark, sfd)
-          .select(col("query_id"), col("neighbor_id"))
-        val nTotal = graft.sources.Tables.embeddings(spark, sfd).count()
-        Seq(
-          "lsh" -> graft.operators.Similarity.lshCandidates(spark, sfd),
-          "ivf" -> graft.operators.Similarity.ivfCandidates(spark, sfd),
-          "multiprobe" -> graft.operators.Similarity.multiprobeCandidates(spark, sfd),
-          "mp-6-8" -> graft.operators.Similarity.multiprobeCandidatesAt(spark, sfd, 6, 8),
-          "mp-6-12" -> graft.operators.Similarity.multiprobeCandidatesAt(spark, sfd, 6, 12),
-          "mp-6-16" -> graft.operators.Similarity.multiprobeCandidatesAt(spark, sfd, 6, 16),
-          "mp-6-24" -> graft.operators.Similarity.multiprobeCandidatesAt(spark, sfd, 6, 24),
-          "mp-7-16" -> graft.operators.Similarity.multiprobeCandidatesAt(spark, sfd, 7, 16),
-          "mp-7-24" -> graft.operators.Similarity.multiprobeCandidatesAt(spark, sfd, 7, 24)
-        ).foreach { case (name, cand) =>
-          val candC = cand.cache()
-          val top = candC.withColumn("rank",
-              row_number().over(org.apache.spark.sql.expressions.Window
-                .partitionBy(col("query_id"))
-                .orderBy(col("cosine").desc, col("neighbor_id").asc)).cast("long"))
-            .filter(col("rank") <= graft.operators.Similarity.TopK)
-            .select(col("query_id"), col("neighbor_id"))
-          val hits = bf.join(top, Seq("query_id", "neighbor_id"), "left_semi")
-            .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-          val counts = candC.groupBy(col("query_id")).agg(count(lit(1)).as("n_cand"))
-          val rows = hits.join(counts, Seq("query_id"), "full")
-            .orderBy(col("query_id")).collect()
-          rows.foreach { r =>
-            val q = r.getLong(0)
-            val h = if (r.isNullAt(1)) 0L else r.getLong(1)
-            val c = if (r.isNullAt(2)) 0L else r.getLong(2)
-            println(f"[annstats] $name $sfd q=$q recall@5=${h / 5.0}%.2f candfrac=${c.toDouble / nTotal}%.3f")
-          }
-          candC.unpersist()
-        }
-      case "pqstats" :: rest =>
-        import org.apache.spark.sql.functions._
-        val sfd = rest.headOption.getOrElse(d)
-        val bf = graft.operators.Similarity.annBruteforceTopk(spark, sfd)
-          .select(col("query_id"), col("neighbor_id"))
-        val nTotal = graft.sources.Tables.embeddings(spark, sfd).count()
-        val cand = graft.operators.Similarity.pqCandidates(spark, sfd).cache()
-        val top = cand.withColumn("rank",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("cosine").desc, col("neighbor_id").asc)).cast("long"))
-          .filter(col("rank") <= graft.operators.Similarity.TopK)
-          .select(col("query_id"), col("neighbor_id"))
-        val nHit = bf.join(top, Seq("query_id", "neighbor_id"), "left_semi").count()
-        val maxCand = cand.groupBy(col("query_id")).agg(count(lit(1)).as("n"))
-          .agg(max(col("n"))).collect()(0).getLong(0)
-        println(f"[pqstats] $sfd macro-recall@5=${nHit / 50.0}%.2f " +
-          f"maxcandfrac=${maxCand.toDouble / nTotal}%.3f")
-        cand.unpersist()
-      case "ivfpqstats" :: rest =>
-        import org.apache.spark.sql.functions._
-        val sfd = rest.headOption.getOrElse(d)
-        val bf = graft.operators.Similarity.annBruteforceTopk(spark, sfd)
-          .select(col("query_id"), col("neighbor_id"))
-        val nTotal = graft.sources.Tables.embeddings(spark, sfd).count()
-        val cand = graft.operators.Similarity.ivfpqCandidates(spark, sfd).cache()
-        val top = cand.withColumn("rank",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("cosine").desc, col("neighbor_id").asc)).cast("long"))
-          .filter(col("rank") <= graft.operators.Similarity.TopK)
-          .select(col("query_id"), col("neighbor_id"))
-        val nHit = bf.join(top, Seq("query_id", "neighbor_id"), "left_semi").count()
-        val maxCand = cand.groupBy(col("query_id")).agg(count(lit(1)).as("n"))
-          .agg(max(col("n"))).collect()(0).getLong(0)
-        println(f"[ivfpqstats] $sfd macro-recall@5=${nHit / 50.0}%.2f " +
-          f"maxcandfrac=${maxCand.toDouble / nTotal}%.3f")
-        cand.unpersist()
-      case "ivfpqwhy" :: rest =>
-        // per exact top-5 pair: did the true neighbor land in a probed
-        // cell, and at what ADC rank / pool share — separates
-        // coarse-probe loss from refine-cut loss (r15 100x calibration)
-        val sfd = rest.headOption.getOrElse(d)
-        graft.operators.Similarity.ivfpqDiag(spark, sfd)
-          .show(60, false)
-      case "fivfpqstats" :: rest =>
-        // filtered IVFPQ vs FILTERED brute force (annFilteredTopk)
-        import org.apache.spark.sql.functions._
-        val sfd = rest.headOption.getOrElse(d)
-        val bf = graft.operators.Similarity.annFilteredTopk(spark, sfd)
-          .select(col("query_id"), col("neighbor_id"))
-        val nTotal = graft.sources.Tables.embeddings(spark, sfd).count()
-        val cand = graft.operators.Similarity.ivfpqFilteredCandidates(spark, sfd).cache()
-        val top = cand.withColumn("rank",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("cosine").desc, col("neighbor_id").asc)).cast("long"))
-          .filter(col("rank") <= graft.operators.Similarity.TopK)
-          .select(col("query_id"), col("neighbor_id"))
-        val nHit = bf.join(top, Seq("query_id", "neighbor_id"), "left_semi").count()
-        val maxCand = cand.groupBy(col("query_id")).agg(count(lit(1)).as("n"))
-          .agg(max(col("n"))).collect()(0).getLong(0)
-        println(f"[fivfpqstats] $sfd macro-recall@5=${nHit / 50.0}%.2f " +
-          f"maxcandfrac=${maxCand.toDouble / nTotal}%.3f")
-        cand.unpersist()
-      case "semstats" :: rest =>
-        import org.apache.spark.sql.functions._
-        val sfd = rest.headOption.getOrElse(d)
-        val cells = graft.operators.Similarity.cellAssigned(spark, sfd)
-          .select(col("vec_id"), col("cell")).localCheckpoint()
-        val exact = graft.operators.Similarity.dedupEmbeddingCosine(spark, sfd)
-          .select(col("vec_a"), col("vec_b"))
-        val r = exact
-          .join(cells.select(col("vec_id").as("vec_a"), col("cell").as("ca")), "vec_a")
-          .join(cells.select(col("vec_id").as("vec_b"), col("cell").as("cb")), "vec_b")
-          .agg(count(lit(1)), sum((col("ca") === col("cb")).cast("long"))).collect()(0)
-        val w = cells.groupBy(col("cell")).agg(count(lit(1)).as("nc"))
-          .agg(sum(col("nc") * (col("nc") - 1) / 2), (sum(col("nc")) * (sum(col("nc")) - 1) / 2))
-          .collect()(0)
-        println(s"[semstats] $sfd n_exact=${r.get(0)} n_within=${r.get(1)} " +
-          s"recall=${r.getLong(1).toDouble / r.getLong(0)} " +
-          s"scan_pairs=${w.get(0)} all_pairs=${w.get(1)} " +
-          s"workfrac=${w.getDouble(0) / w.getDouble(1)}")
-      case "tfidfstages" :: Nil =>
-        import org.apache.spark.sql.functions._
-        import graft.sources.Tables
-        import spark.implicits._
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
-        val barriered = docs.repartition(32, col("doc_id"))
-        time("scan only") { noop(docs) }
-        time("barrier") { noop(barriered) }
-        val tf = barriered.as[(Long, String)]
-          .flatMap { case (id, text) =>
-            val m = new java.util.HashMap[String, Long]()
-            text.split(" ", -1).foreach(t => m.merge(t, 1L, java.lang.Long.sum _))
-            import scala.jdk.CollectionConverters._
-            m.entrySet().iterator().asScala.map(e => (id, e.getKey, e.getValue))
-          }
-          .toDF("doc_id", "term", "tf")
-        time("tf kernel") { noop(tf) }
-        time("tf kernel 2nd") { noop(tf) }
-        val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        time("dfreq") { noop(dfreq) }
-        val joined = tf.join(dfreq, "term")
-        time("tf+dfreq join") { noop(joined) }
-        time("tf+dfreq join 2nd") { noop(joined) }
-        val full = graft.operators.Curation.curTfidfTopterms(spark, d)
-        time("full") { noop(full) }
-        time("full 2nd") { noop(full) }
-
-      case "piistages" :: Nil =>
-        import org.apache.spark.sql.functions._
-        import graft.sources.Tables
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val UrlRe = "https?://[^ ]+"
-        val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-        val SsnRe = "\\b\\d{3}-\\d{2}-\\d{4}\\b"
-        val PhoneRe = "\\+1-555-\\d{4}"
-        val id4 = lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")
-        val raw = concat(
-          lit("contact user"), col("doc_id"), lit("@example.com"),
-          when(pmod(col("doc_id"), lit(3)) === 0,
-            concat(lit(" ssn 123-45-"), id4)).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(2)) === 0,
-            concat(lit(" call +1-555-"), id4)).otherwise(lit("")),
-          lit(" via https://ex.com/d/"), col("doc_id"), lit(" :: "), col("text"))
-        def countRe(c: org.apache.spark.sql.Column, re: String) =
-          size(regexp_extract_all(c, lit(re), lit(0))).cast("long")
-        val base = Tables.documents(spark, d).withColumn("raw", raw)
-        val redact = base.select(col("doc_id"),
-          regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-            col("raw"), UrlRe, "[URL]"), EmailRe, "[EMAIL]"), SsnRe, "[SSN]"),
-            PhoneRe, "[PHONE]").as("redacted"))
-        val counts = base.select(col("doc_id"),
-          (countRe(col("raw"), UrlRe) + countRe(col("raw"), EmailRe) +
-            countRe(col("raw"), SsnRe) + countRe(col("raw"), PhoneRe)).as("n_pii"))
-        val both = graft.operators.Curation.curPiiRedact(spark, d)
-        val postSort = base.select(col("doc_id"), col("raw"))
-          .orderBy(col("doc_id"))
-          .select(col("doc_id"),
-            regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-              col("raw"), UrlRe, "[URL]"), EmailRe, "[EMAIL]"), SsnRe, "[SSN]"),
-              PhoneRe, "[PHONE]").as("redacted"),
-            (countRe(col("raw"), UrlRe) + countRe(col("raw"), EmailRe) +
-              countRe(col("raw"), SsnRe) + countRe(col("raw"), PhoneRe)).as("n_pii"))
-        (1 to 2).foreach { _ =>
-          time("raw only") { noop(base.select(col("doc_id"), col("raw"))) }
-          time("redact only") { noop(redact) }
-          time("counts only") { noop(counts) }
-          time("full query") { noop(both) }
-          time("post-sort project") { noop(postSort) }
-        }
-        println(postSort.queryExecution.executedPlan.toString.linesIterator
-          .take(12).mkString("\n"))
-
-      case "ssestages" :: Nil =>
-        import org.apache.spark.sql.functions._
-        import graft.sources.Tables
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val chunkSchema = org.apache.spark.sql.types.StructType.fromDDL(
-          "code INT, data STRUCT<answer: STRING, session_id: STRING, reference: STRUCT<total: BIGINT>>")
-        val nPart = spark.sessionState.conf.numShufflePartitions
-        val line1 = concat(lit("""data: {"code": 0, "data": {"answer": "partial """),
-          col("event_id"), lit("""", "session_id": "sess-"""), col("user_id"), lit(""""}}"""))
-        val raw = concat_ws("\n", lit("event: message"), line1, lit("data: [DONE]"))
-        val base = Tables.events(spark, d)
-          .select(col("event_id"), col("user_id"), col("props"))
-          .repartition(nPart, col("event_id"))
-          .select(col("event_id"), raw.as("raw"))
-        val lines = base
-          .select(col("event_id"), posexplode(split(col("raw"), "\n")).as(Seq("line_no", "l")))
-          .filter(col("l").startsWith("data:"))
-        val parsedOnly = lines.select(col("event_id"), col("line_no"),
-          from_json(trim(expr("substring(l, 6)")), chunkSchema).as("p"))
-        (1 to 2).foreach { _ =>
-          time("base repart") { noop(base) }
-          time("explode+filter") { noop(lines) }
-          time("+from_json") { noop(parsedOnly) }
-          time("full query") { noop(graft.operators.Etl.etlSseParse(spark, d)) }
-        }
-
-      case "substrbits" :: Nil =>
-        // stage-by-stage cost of dedup_substring at the current SF
-        import org.apache.spark.sql.functions._
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val docs = graft.sources.Tables.documents(spark, d)
-          .select(col("doc_id"), graft.operators.TextAnalysis.tokens(col("text")).as("toks"))
-          .withColumn("n_tokens", size(col("toks")))
-        val k = graft.operators.Dedup.SubstrK
-        val grams = graft.operators.Dedup.substrGrams(spark, d, k)
-        val packed = shiftleft(col("doc_id"), graft.operators.Dedup.PackPosBits) + col("pos")
-        (1 to 2).foreach { _ =>
-          time("docs tokenized") { noop(docs) }
-          time("grams kernel") { noop(grams) }
-          val firsts = grams.groupBy(col("gh"))
-            .agg(min(packed).as("first_pk"), count(lit(1)).as("cnt"))
-            .filter(col("cnt") > 1).drop("cnt")
-          time("firsts agg") { noop(firsts) }
-          val dup = graft.operators.Dedup.markJoin(grams, firsts, Seq("gh"), packed)
-            .filter(packed =!= col("first_pk"))
-            .select(col("doc_id"), col("pos").as("a"))
-          time("dup marks") { noop(dup) }
-          time("assemble") { noop(graft.operators.Dedup.substrAssemble(docs, dup, k)) }
-          time("full query") { noop(graft.operators.Dedup.dedupSubstring(spark, d)) }
-        }
-
-      case "kn5bits" :: Nil =>
-        // stage costs of text_lm_kn5 at the current SF (hashed tokens,
-        // mirrors the real pipeline stage by stage)
-        import org.apache.spark.sql.functions._
-        import spark.implicits._
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val stream = graft.sources.Tables.documents(spark, d)
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .mapPartitions { it =>
-            it.flatMap { case (id, text) =>
-              val t = if (text == null) Array.empty[String] else text.split(" ", -1)
-              if (t.length < 5) Iterator.empty
-              else {
-                val th = new Array[Long](t.length)
-                var i = 0
-                while (i < t.length) {
-                  val b = t(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                  th(i) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-                    b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-                  i += 1
-                }
-                (0 until t.length - 4).iterator.map(i =>
-                  (id, th(i), th(i + 1), th(i + 2), th(i + 3), th(i + 4)))
-              }
-            }
-          }
-          .toDF("doc_id", "w1", "w2", "w3", "w4", "w5")
-        (1 to 2).foreach { _ =>
-          time("kn5 stream raw") { noop(stream) }
-          val ck = stream.localCheckpoint()
-          time("kn5 ckpt read") { noop(ck) }
-          val t5 = ck.groupBy(col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
-            .agg(count(lit(1)).as("c5")).localCheckpoint()
-          time("kn5 t5 (agg+ckpt)") { noop(t5) }
-          val b4 = t5.select(col("w1").as("g1"), col("w2").as("g2"), col("w3").as("g3"), col("w4").as("g4"))
-            .union(t5.select(col("w2").as("g1"), col("w3").as("g2"), col("w4").as("g3"), col("w5").as("g4")))
-            .distinct().localCheckpoint()
-          time("kn5 b4 (dist+ckpt)") { noop(b4) }
-          val b3 = b4.select(col("g1"), col("g2"), col("g3"))
-            .union(b4.select(col("g2").as("g1"), col("g3").as("g2"), col("g4").as("g3")))
-            .distinct().localCheckpoint()
-          time("kn5 b3 (dist+ckpt)") { noop(b3) }
-          val b2 = b3.select(col("g1"), col("g2"))
-            .union(b3.select(col("g2").as("g1"), col("g3").as("g2")))
-            .distinct().localCheckpoint()
-          time("kn5 b2 (dist+ckpt)") { noop(b2) }
-          val n1l4 = t5.groupBy(col("w2"), col("w3"), col("w4"), col("w5"))
-            .agg(count(lit(1)).as("n1l4"))
-          time("kn5 n1l4") { noop(n1l4) }
-          val ctx4 = t5.groupBy(col("w1"), col("w2"), col("w3"), col("w4"))
-            .agg(sum(col("c5")).as("c1234"), count(lit(1)).as("n1f1234"))
-          time("kn5 ctx4") { noop(ctx4) }
-          val j1 = t5.join(ctx4.hint("shuffle_hash"), Seq("w1", "w2", "w3", "w4"))
-          time("kn5 t5*ctx4") { noop(j1) }
-          time("full") { noop(graft.operators.TextAnalysis.textLmKn5Score(spark, d)) }
-        }
-
-      case "substrk" :: kk :: Nil =>
-        // dedup_substring at an arbitrary window width (e.g. the
-        // paper's k=50) against SPARK_GRAFT_SF_DIR — the probe behind
-        // SURVEY's "only the splitter changes with k" claim.
-        val k = kk.toInt
-        def noop(df: org.apache.spark.sql.DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        (1 to 2).foreach { i =>
-          time(s"dedup_substring k=$k run$i") {
-            noop(graft.operators.Dedup.dedupSubstringAt(spark, d, k))
-          }
-        }
-
-      case "npplan" :: Nil =>
-        // dev forensics: the neardup-probe drive with the last
-        // micro-batch's EXECUTED plan printed (streaming plans are
-        // invisible to the explain modes above)
-        import org.apache.spark.sql.functions._
-        import spark.implicits._
-        val docs = graft.sources.Tables.documents(spark, d).select(col("doc_id"), col("text"))
-        val shardRows = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .as[(Long, String)].collect().toSeq
-        val (tl, mn) = shardRows.partition(_._1 % 1000 == 0)
-        val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-        implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-        val stream =
-          org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-        val out = graft.streaming.Streams.neardupProbeStream(
-          spark, stream.toDF().toDF("doc_id", "text"), corpus, pinBands = true)
-        val q = out.writeStream.outputMode("append").format("memory")
-          .queryName("npplan").start()
-        try {
-          val t0 = System.nanoTime()
-          stream.addData(mn)
-          q.processAllAvailable()
-          println(f"[npplan] trigger1 ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          val t1 = System.nanoTime()
-          stream.addData(tl)
-          q.processAllAvailable()
-          println(f"[npplan] trigger2 ${(System.nanoTime() - t1) / 1e9}%.2f s")
-          q.explain(extended = false)
-        } finally q.stop()
       case "explainall" :: outDir :: qs =>
-        // dump .explain("formatted") for every query (or the given
-        // subset) to <outDir>/<query>.txt — the plans/r15 evidence
-        // capture. Uses explainString on the query execution so the
-        // full formatted text lands in the file, not stdout.
+        // explainString on the query execution, so the full formatted
+        // text lands in the file, not stdout
         val targets = if (qs.nonEmpty) qs else SparkEntry.queries.keys.toList.sorted
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
         targets.foreach { q =>
@@ -672,24 +71,10 @@ object Probe {
           } catch { case e: Throwable =>
             println(s"[probe] explain $q FAILED: ${e.getMessage}")
           }
-          spark.sharedState.cacheManager.clearCache()
-          graft.StateRegistry.sweep(spark)
-          graft.operators.Similarity.dropDistributedEvalState()
-        }
-
-      case "times" :: qs =>
-        val targets = if (qs.nonEmpty) qs else SparkEntry.queries.keys.toList.sorted
-        targets.foreach { q =>
-          // noop sink like Bench: count() lets Catalyst prune projected
-          // expression work and undercounts badly.
-          def run(): Long = {
-            SparkEntry.queries(q)(spark, d).write.format("noop").mode("overwrite").save(); 0L
-          }
-          time(q) { run() }
-          time(q + " (2nd)") { run() }
+          Bench.releaseQueryState(spark)
         }
       case _ =>
-        println("usage: Probe times [queries...] | Probe explain <query>")
+        println("usage: Probe knjobs <query> | Probe explainall <outDir> [queries...]")
     }
     spark.stop()
   }

@@ -112,7 +112,7 @@ case class QuantileSketch(
 object QuantileSketch {
   /** Level-stack sketch state. Level i holds items of weight 2^i. */
   final class Buf(capacity: Int) {
-    private var levels =
+    private val levels =
       scala.collection.mutable.ArrayBuffer(
         scala.collection.mutable.ArrayBuffer.empty[Double])
 

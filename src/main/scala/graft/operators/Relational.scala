@@ -934,106 +934,31 @@ object Relational {
     * O(m^1.5) and no single key is hot, regardless of the degree
     * distribution. Each triangle then has exactly ONE node whose two
     * oriented out-edges span it, and the closing edge is oriented
-    * (v1 → v2) consistently with the same total order — so one
-    * equi-join on the wedge's outer pair counts each triangle exactly
-    * once, no division by 3, no double counting.
+    * (v1 → v2) consistently with the same total order — so counting
+    * the common out-neighbours of each oriented edge's endpoints counts
+    * each triangle exactly once, no division by 3, no double counting.
     *
     * All counts are integers; the clustering coefficient is the one
-    * float op (3T/W, single division, both engines identical). Plan:
-    * the edge list is built once (hash self-join on order key, the
-    * corpus-sized exchange), persisted, and reused by the degree,
-    * wedge and closing stages; degree/orientation joins are
-    * shuffle-hash with the node-sized side as build (broadcastable in
-    * the small regime, but the shuffle-hash form survives a 1e9-node
-    * graph unchanged — the q37 strategy-flip lesson baked in).
-    */
-  def q48Triangles(s: SparkSession, d: String): DataFrame =
-    q48TrianglesAdj(s, d)
-
-  /** The r11–r14 wedge-join form, kept for the record (and as the
-    * reference topology the r15 A/B measured against): oriented wedge
-    * self-join closed by an equi-join on the wedge's outer pair. The
-    * r15 adjacency-intersection form ([[q48TrianglesAdj]], now the
-    * registered body) beat it 3.2 s vs 6.5-7.2 s min-of-3 at sf0.1 in
-    * BOTH interleave orders (same process), because the wedge join
-    * materializes and EXCHANGES O(m^1.5) wedge rows that the
-    * intersection form replaces with in-row array work on the same
-    * O(√m)-bounded out-lists.
-    */
-  private[graft] def q48TrianglesWedge(s: SparkSession, d: String): DataFrame = {
-    // undirected distinct edges from the SHARED adjacency
-    // ([[coPurchaseAdjacency]]): the symmetric set table holds both
-    // orientations of every pair, so a map-side explode + a < b
-    // filter yields each undirected edge exactly once — the self-join
-    // + dropDuplicates exchanges this query used to pay are now the
-    // shared build. Degree is just the set size (free — the r11 form
-    // paid a node aggregation for it).
-    val adj = coPurchaseAdjacency(s, d)
-    val e = adj.select(col("n").as("a"), explode(col("nbrs")).as("b"))
-      .filter(col("a") < col("b"))
-      .cache()
-    val deg = adj.select(col("n"), size(col("nbrs")).cast("long").as("deg"))
-      .cache()
-    // orient each edge from the (deg, id)-smaller endpoint to the
-    // larger; the node-sized degree table is the hinted BUILD side
-    val o = e
-      .join(deg.select(col("n").as("a"), col("deg").as("da")).hint("shuffle_hash"), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("deg").as("db")).hint("shuffle_hash"), Seq("b"))
-      .select(
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("a")).otherwise(col("b")).as("u"),
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("v"))
-    // wedges (u → v1, u → v2, v1 ≠ v2, both orders) closed by the
-    // oriented edge (v1 → v2): only the order-consistent wedge matches
-    val w1 = o.select(col("u"), col("v").as("v1"))
-    val w2 = o.select(col("u"), col("v").as("v2"))
-    // both joins BUILD on the edge-sized oriented list and STREAM the
-    // wedges (the O(m^1.5) side never enters a hash map)
-    val triRows = w1.join(w2.hint("shuffle_hash"), Seq("u"))
-      .filter(col("v1") =!= col("v2"))
-      .select(col("v1").as("u"), col("v2").as("v"))
-      .join(o.hint("shuffle_hash"), Seq("u", "v"))
-      .select(lit(0L).as("deg"), lit(1L).as("is_tri"))
-    // single-row combine by CONDITIONAL AGG over a tagged union (the
-    // q46 idiom) — never a scalar cross join, which would plan a
-    // BroadcastNestedLoopJoin; map-side partials collapse both the
-    // triangle matches and the node dimension before one exchange.
-    // n_wedges = Σ C(deg, 2) over nodes — the cc denominator.
-    triRows.unionAll(deg.select(col("deg"), lit(0L).as("is_tri")))
-      .agg(
-        count(when(col("is_tri") === 0, lit(1))).as("n_nodes"),
-        expr("sum(CASE WHEN is_tri = 0 THEN deg ELSE 0 END) DIV 2").as("n_edges"),
-        sum(when(col("is_tri") === 0, expr("deg * (deg - 1) DIV 2"))
-          .otherwise(lit(0L))).as("n_wedges"),
-        sum(col("is_tri")).as("n_triangles"))
-      .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
-        when(col("n_wedges") > 0,
-          round(col("n_triangles").cast("double") * 3.0 /
-            col("n_wedges").cast("double"), 4))
-          .otherwise(lit(0.0)).as("global_cc"))
-  }
-
-  /** The registered q48 body (r15): adjacency-intersection triangle
-    * counting — same degree-oriented discipline, two structural
-    * changes measured against the r11-r14 wedge-join form
-    * ([[q48TrianglesWedge]]; same-process A/B, both interleave
-    * orders: 3.16-3.21 s vs 6.47-7.24 s min-of-3 at sf0.1):
+    * float op (3T/W, single division, both engines identical). Plan
+    * (r15 adjacency intersection; the r11-r14 wedge-join form it
+    * replaced, 3.16-3.21 s vs 6.47-7.24 s min-of-3 at sf0.1 in a
+    * same-process A/B over both interleave orders, is recorded in
+    * OPTIMIZATION_r15 §1 with before/after plans in `plans/r15`):
     *  1. Orientation from the DIRECTED adjacency with ONE degree join:
     *     the symmetric set table already holds both directions of every
     *     edge, so exploding (a, da=|nbrs|, b) and keeping the copies
     *     where (da, a) < (db, b) yields each oriented edge exactly once
-    *     after a single shuffle-hash join on b — the wedge-join form
-    *     paid an a<b pre-filter plus TWO degree joins.
+    *     after a single shuffle-hash join on b (build = the node-sized
+    *     degree table, shuffle-hash so a 1e9-node graph plans the same).
     *  2. Triangles by per-edge out-neighborhood INTERSECTION (the
     *     adjacency-list form of Schank–Wagner): for each oriented edge
     *     (u, v), |N+(u) ∩ N+(v)| closing vertices. The out-lists are
     *     bounded O(√m) by orientation, so the intersect stream carries
-    *     m rows of ≤√m arrays instead of the wedge join's O(m^1.5)
+    *     m rows of ≤√m arrays instead of a wedge join's O(m^1.5)
     *     exchanged wedge ROWS, and no wedge row ever crosses an
     *     exchange — the per-edge work happens in-row.
     */
-  private[graft] def q48TrianglesAdj(s: SparkSession, d: String): DataFrame = {
+  def q48Triangles(s: SparkSession, d: String): DataFrame = {
     val adj = coPurchaseAdjacency(s, d)
     // NOT cached (ADVICE r15: the cache was never unpersisted, leaking
     // a cached plan per invocation into drivers that don't sweep, e.g.

@@ -39,7 +39,9 @@ object Similarity {
   val NumPlanes = 4 // bits per table: 16 buckets => ~n/16 mates each
 
   /** CORRECTNESS bars for [[annLshRecall]] / [[annIvfRecall]],
-    * calibrated from measured values (Probe annstats, all three SFs;
+    * calibrated from the gate rows' own measured recall/prune columns
+    * (all three SFs; `tools/recallprobe.py` re-runs the self-checking
+    * gates at 10x into `recallgates_10x.json`;
     * seeded hyperplanes/quantizer + fixed data ⇒ deterministic, so the
     * driver re-verifies constants). Macro-recall (hit fraction over
     * all query×top-5 pairs) is the gated quantity: per-query floors
@@ -496,35 +498,31 @@ object Similarity {
     * shape as [[lshCandidates]] afterwards: bucket-equality join,
     * exact cosine, per-query top-k.
     */
-  private[graft] def multiprobeCandidates(s: SparkSession, d: String): DataFrame =
-    multiprobeCandidatesAt(s, d, MpPlanes, MpProbes)
-
-  private[graft] def multiprobeCandidatesAt(s: SparkSession, d: String,
-      nPlanes: Int, nProbes: Int): DataFrame = {
+  private[graft] def multiprobeCandidates(s: SparkSession, d: String): DataFrame = {
     val rng = new scala.util.Random(43)
-    val planes: Seq[Seq[Double]] = Seq.fill(nPlanes)(Seq.fill(64)(rng.nextGaussian()))
+    val planes: Seq[Seq[Double]] = Seq.fill(MpPlanes)(Seq.fill(64)(rng.nextGaussian()))
     val e = withNorm(s, d)
     val withMargins = e.select(col("vec_id") +: col("v") +: col("nrm") +:
       planes.zipWithIndex.map { case (p, i) =>
         dot(col("v"), typedLit(p)).as(s"m$i")
       }: _*)
-    val bits = (0 until nPlanes).map(i =>
+    val bits = (0 until MpPlanes).map(i =>
       when(col(s"m$i") >= 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
     val eb = withMargins.withColumn("bkt", bits)
     val n = eb.select(col("vec_id").as("neighbor_id"), col("v").as("vb"),
       col("nrm").as("nrmb"), col("bkt"))
     // (cost, flip-mask) structs for every perturbation of the home
     // bucket; array_sort orders by cost then mask (deterministic),
-    // slice keeps the nProbes cheapest
-    val maskStructs = (0L until (1L << nPlanes)).map { mask =>
-      val cost = (0 until nPlanes).filter(i => (mask & (1L << i)) != 0L)
+    // slice keeps the MpProbes cheapest
+    val maskStructs = (0L until (1L << MpPlanes)).map { mask =>
+      val cost = (0 until MpPlanes).filter(i => (mask & (1L << i)) != 0L)
         .map(i => abs(col(s"m$i")))
         .reduceOption[Column](_ + _).getOrElse(lit(0.0))
       struct(cost.as("cost"), lit(mask).as("mask"))
     }
     val q = eb.filter(col("vec_id") < NumQueryVecs)
       .withColumn("probe",
-        explode(slice(array_sort(array(maskStructs: _*)), 1, nProbes)))
+        explode(slice(array_sort(array(maskStructs: _*)), 1, MpProbes)))
       .select(col("vec_id").as("query_id"), col("v").as("va"), col("nrm").as("nrma"),
         col("bkt").bitwiseXOR(col("probe.mask")).as("bkt"))
     broadcast(q).join(n, Seq("bkt"))
@@ -1426,8 +1424,7 @@ object Similarity {
   }
 
   /** The IVFPQ ADC scores — one row per (query, vector-in-a-probed-
-    * cell) with the PQ-approximated cosine; shared by the candidate
-    * generator and the [[ivfpqDiag]] calibration diagnostic. */
+    * cell) with the PQ-approximated cosine, before the refine cut. */
   private def ivfpqAdc(s: SparkSession, d: String, e: DataFrame): DataFrame = {
     val books = pqCodebooks(s, d)
     // ONE fused corpus pass for (cell, code): see [[pqAssignCell]] —
@@ -1449,31 +1446,9 @@ object Similarity {
       .agg((sum(col("pdot")) / max(col("nrma")) / sqrt(sum(col("cnorm2")))).as("approx_cos"))
   }
 
-  /** Calibration diagnostic (Probe ivfpqwhy): for each exact top-k
-    * pair, whether the true neighbor sits in one of its query's probed
-    * cells at all (coarse-probe ceiling) and, if so, its ADC rank and
-    * the query's scanned-pool size (refine-cut question) — separates
-    * the two loss stages when the recall gate is recalibrated at a new
-    * scale. */
-  private[graft] def ivfpqDiag(s: SparkSession, d: String): DataFrame = {
-    val e = withNorm(s, d).withColumn("sims", centroidSims(kmeansCentroids(s, d)))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    val ranked = ivfpqAdc(s, d, e)
-      .withColumn("adc_rank", row_number().over(wq))
-      .withColumn("pool", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))))
-      .select(col("query_id"), col("neighbor_id"), col("adc_rank"), col("pool"))
-    annBruteforceTopk(s, d)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
-      .join(ranked, Seq("query_id", "neighbor_id"), "left_outer")
-      .withColumn("in_probed", col("adc_rank").isNotNull.cast("int"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   /** CORRECTNESS bars for [[annPqRecall]], calibrated like the
-    * LSH/IVF bars (Probe pqstats, all three SFs; deterministic fit ⇒
+    * LSH/IVF bars (gate-row columns at all three SFs, 10x pinned by
+    * `tools/recallprobe.py`; deterministic fit ⇒
     * constants the driver re-verifies). The exact re-rank means
     * precision within the candidate set is 1; recall is bounded by
     * whether the true neighbors survive the ADC top-[[PqRefine]] cut.
@@ -1495,8 +1470,9 @@ object Similarity {
   def annPqRecall(s: SparkSession, d: String): DataFrame =
     recallGate(s, d, pqCandidates(s, d), PqRecallBar, PqPruneBar)
 
-  /** CORRECTNESS bars for [[annIvfpqRecall]] (Probe ivfpqstats, all
-    * three SFs; deterministic fit ⇒ constants the driver re-verifies).
+  /** CORRECTNESS bars for [[annIvfpqRecall]] (gate-row columns at all
+    * three SFs, 10x pinned in `recallgates_10x.json`; deterministic
+    * fit ⇒ constants the oracle gate re-verifies).
     * A true neighbor must sit in a probed cell AND survive the ADC
     * top-[[PqRefine]] cut — but the cell restriction also removes
     * ADC competitors, so the cut keeps more in-cell true neighbors
@@ -1562,7 +1538,8 @@ object Similarity {
   }
 
   /** CORRECTNESS bars for [[annFilteredIvfpqRecall]], calibrated like
-    * the other ANN bars (Probe fivfpqstats, all three SFs;
+    * the other ANN bars (gate-row columns at all three SFs, 10x pinned
+    * in `recallgates_10x.json`;
     * deterministic fit ⇒ constants the driver re-verifies) — recall
     * here is against the FILTERED brute force ([[annFilteredTopk]]),
     * not the unfiltered truth. The label restriction removes ADC

@@ -613,8 +613,6 @@ object TextAnalysis {
     val K1 = Seq("w1", "s1"); val K2 = Seq("w2", "s2"); val K3 = Seq("w3", "s3")
     val K4 = Seq("w4", "s4"); val K5 = Seq("w5", "s5")
     def cols(ks: Seq[String]*): Seq[Column] = knCols(ks: _*)
-    def ren(from: Seq[String], to: Seq[String]): Seq[Column] =
-      from.zip(to).map { case (f, t) => col(f).as(t) }
     // the one corpus-sized shuffle: 5-gram types with token counts.
     // Each model table below is MATERIALIZED once: t5 feeds ~6
     // consumers and each projection level feeds 4-5 more, so without

@@ -19,9 +19,9 @@ object Tables {
   /** Resolved-relation cache, keyed per (application, dataset, table).
     *
     * Constructing a parquet DataFrame re-pays file listing + footer
-    * schema inference on EVERY call (~45 ms warm at sf0.1, measured by
-    * FloorProbe), and the first action on a fresh relation pays another
-    * ~50 ms of scan-node setup vs a reused one. A catalog-backed engine
+    * schema inference on EVERY call (~45 ms warm at sf0.1, measured),
+    * and the first action on a fresh relation pays another ~50 ms of
+    * scan-node setup vs a reused one. A catalog-backed engine
     * (DuckDB's catalog, Spark's own metastore tables) resolves a table
     * once per session and reuses the relation; these paths are immutable
     * driver-generated datasets, so the cached plan can never go stale.
@@ -30,9 +30,6 @@ object Tables {
     */
   private val relationCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
-  /** Drop cached relations (for tests that rewrite a table path). */
-  private[graft] def clearRelationCache(): Unit = relationCache.clear()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // InferFiltersFromGenerate turns explode(<interpreted lambda>) into

@@ -50,6 +50,7 @@ import org.apache.spark.sql.functions._
 object Versioned {
 
   private val LogDir = "_graft_log"
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** One manifest line: a live data file plus (optionally) its
     * per-file min/max key statistics — the Delta/Iceberg
@@ -407,9 +408,10 @@ object Versioned {
     * with missing/foreign-typed statistics makes the whole file
     * conservatively stats-less (pruning keeps it; [[pruneEntries]]
     * never drops a stats-less file, so a footer anomaly can cost IO
-    * but never rows).
+    * but never rows). A footer that cannot be read at all takes the
+    * same stats-less fallback, logged as a WARN with the file and cause.
     */
-  private def entriesWithStats(spark: SparkSession, path: String,
+  private[graft] def entriesWithStats(spark: SparkSession, path: String,
       newFiles: Seq[String], statsKey: Option[String]): Seq[FileEntry] = statsKey match {
     case Some(k) if newFiles.nonEmpty =>
       val conf = spark.sparkContext.hadoopConfiguration
@@ -451,7 +453,9 @@ object Versioned {
             if (safe && seen) FileEntry(f, Some(k), Some(mn), Some(mx))
             else FileEntry(f, None, None, None)
           } finally r.close()
-        } catch { case scala.util.control.NonFatal(_) =>
+        } catch { case scala.util.control.NonFatal(e) =>
+          log.warn(s"footer stats unreadable for $path/$f, keeping it " +
+            s"stats-less (never pruned): $e")
           FileEntry(f, None, None, None)
         }
       }

@@ -417,24 +417,16 @@ object Streams {
       corpusDocs: DataFrame, pinBands: Boolean = false): DataFrame = {
     import s.implicits._
     import graft.operators.Dedup
-    import org.apache.spark.sql.GraftColumnBridge
-    val nPart = s.sessionState.conf.numShufflePartitions
     // pinBands: a MULTI-batch drive re-executes the static side per
     // micro-batch — without pinning, every trigger re-pays the
     // corpus-sized band build (explode → groupBy → signature kernel;
     // the +5 s that killed the r13 two-batch drive). Checkpointing the
-    // band table makes each extra trigger cost only its shard side.
-    // Round 16: the pinned checkpoints additionally carry their JOIN
-    // LAYOUT — hash partitioning + intra-partition sort on the join
-    // key, stamped on the checkpointed scan — because a plain
-    // checkpoint forgets both, so EVERY trigger re-exchanged and
-    // re-sorted the corpus band table (band, bh) and the corpus
-    // shingle table (doc id) under the two sort-merge joins (measured:
-    // ~1.0 s per trigger flat, even for a tail batch of ~30 docs; the
-    // static side dominated). With the layout stamped, a trigger's
-    // static sides are pure checkpoint scans — the per-trigger cost is
-    // the shard side, as the pin always intended. The one-time build
-    // pays the same exchange + sort it used to pay per trigger.
+    // band table removes that rebuild. A plain checkpoint carries no
+    // partitioning or ordering, though, so every trigger still
+    // re-exchanges and re-sorts the corpus band table (band, bh) and
+    // the corpus shingle table (doc id) under the two sort-merge joins
+    // (measured in round 16: ~1.0 s per trigger, even for a tail batch
+    // of ~30 docs).
     // Batch-mode consumers (streamNeardup) leave it off: the bands are
     // consumed exactly once there, so pinning would only add a
     // materialization pass.
@@ -512,8 +504,8 @@ object Streams {
     // CAPPED at the session width so a cluster-scale shard runs at
     // full width — data-derived, not a local-mode constant. Results
     // are partitioning-invariant; the pinned static checkpoints are
-    // built INSIDE neardupProbeStream at the same conf, so their
-    // stamped layout matches the narrowed plan. Same serial-driver
+    // built INSIDE neardupProbeStream, so they run at the narrowed
+    // width too. Same serial-driver
     // guard + restore-after-termination discipline as the stateful
     // sessionizer drive.
     val rowsPerStore = 2000

@@ -36,25 +36,7 @@ object GraftColumnBridge {
     * buckets, which `HashPartitioning(n)` would mis-describe) —
     * [[withStablePartitioning]] wraps that conf dance.
     */
-  def localCheckpointHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame =
-    localCheckpointStamped(df, keys, stampOrdering = false)
-
-  /** [[localCheckpointHashPartitioned]] that ALSO stamps an ascending
-    * sort order on `keys`: for a checkpoint whose build ended in
-    * `repartition(keys) + sortWithinPartitions(keys)`, downstream
-    * sort-merge joins on `keys` then need neither an exchange NOR a
-    * per-consumer sort on this side — the layout a multi-trigger
-    * stream-static join reads once per micro-batch (round 16:
-    * stream_neardup_probe's pinned corpus sides re-sorted per trigger
-    * without this). Caller contract extends the partitioned variant's:
-    * the build must REALLY end in that exchange + intra-partition sort
-    * (and AQE coalescing must be off during the build).
-    */
-  def localCheckpointHashPartitionedSorted(df: DataFrame, keys: Seq[String]): DataFrame =
-    localCheckpointStamped(df, keys, stampOrdering = true)
-
-  private def localCheckpointStamped(df: DataFrame, keys: Seq[String],
-      stampOrdering: Boolean): DataFrame = {
+  def localCheckpointHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame = {
     val ck = df.localCheckpoint()
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     ck.queryExecution.analyzed match {
@@ -63,15 +45,11 @@ object GraftColumnBridge {
           throw new IllegalArgumentException(s"no column $k in ${lr.output}")))
         val part = catalyst.plans.physical.HashPartitioning(
           keyAttrs, lr.rdd.getNumPartitions)
-        val ord = if (stampOrdering)
-          keyAttrs.map(a => catalyst.expressions.SortOrder(
-            a, catalyst.expressions.Ascending))
-        else lr.outputOrdering
         // second (curried) param list: session + origin stats /
         // constraints — the origins are private on lr, and dropping
         // them only loses a statistics hint, never correctness
         classic.Dataset.ofRows(spark,
-          lr.copy(outputPartitioning = part, outputOrdering = ord)(
+          lr.copy(outputPartitioning = part)(
             spark, None, None))
       case _ => ck
     }

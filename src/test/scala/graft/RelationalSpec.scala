@@ -58,7 +58,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q17 salted agg equals direct groupBy") {
-    import org.apache.spark.sql.functions._
     val salted = SparkEntry.queries("q17_salted_agg")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     val direct = sources.Tables.events(spark, sf)

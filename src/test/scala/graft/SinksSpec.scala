@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -860,6 +860,13 @@ class SinksSpec extends AnyFunSuite {
     val ne = Versioned.manifestEntries(spark, npath, 0)
     assert(ne.forall(_.statsCol.isEmpty))
     assert(Versioned.pruneEntries(ne, "id", 0L, 9L) == ne)
+
+    // unreadable footer: logged fallback to a stats-less entry, no throw
+    val bad = "part=p1/corrupt.parquet"
+    Files.createDirectories(Paths.get(npath, "part=p1"))
+    Files.write(Paths.get(npath, bad), "not a parquet file".getBytes("UTF-8"))
+    assert(Versioned.entriesWithStats(spark, npath, Seq(bad), Some("id")) ==
+      Seq(Versioned.FileEntry(bad, None, None, None)))
   }
 
   test("per-record text sink writes one file per row and resumes idempotently") {

@@ -394,7 +394,7 @@ class TextCurationSpec extends AnyFunSuite {
         case ((s0, e0) :: rest, (a, b)) if a <= e0 + 1 => (s0, math.max(e0, b)) :: rest
         case (acc, iv) => iv :: acc
       }.reverse
-    val expected = docs.filter(_._1 % 10 == 0).map { case (id, toks) =>
+    val expected = docs.filter(_._1 % 10 == 0).map { case (id, _) =>
       val m = merge(dupIv.getOrElse(id, Nil))
       id -> ((m.length.toLong, m.map { case (a, b) => b - a + 1 }.sum.toLong))
     }.toMap

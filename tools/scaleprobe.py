@@ -3,9 +3,9 @@
 
 Replicates /root/testdata/sf0.1 documents+embeddings 10x with shifted
 ids into tmp/sf1probe (inside the repo; regenerable, not committed).
-Run the dedup/ANN/curation families against it via:
+Run the dedup/ANN/curation families against it with the Bench subset run:
 
-  SPARK_GRAFT_SF_DIR=$PWD/tmp/sf1probe sbt "runMain graft.Probe times dedup_ngram_jaccard ..."
+  SPARK_GRAFT_SF_DIR=$PWD/tmp/sf1probe SPARK_GRAFT_CPUS=$(nproc) SPARK_GRAFT_ONLY=dedup_ngram_jaccard,... sbt "runMain graft.Bench"
 
 Round-3 results (50k docs / 20k vectors, local[32]): every dedup, ANN
 and curation query completed with no memory failures; scaling was

@@ -66,7 +66,7 @@ ROUND-9 100x RESULTS (48g heap, warm = repeat run in one session):
 
 Usage:
   python tools/scaleprobe100.py           # build tmp/sf10probe
-  SPARK_GRAFT_SF_DIR=$PWD/tmp/sf10probe sbt "runMain graft.Probe times <queries>"
+  SPARK_GRAFT_SF_DIR=$PWD/tmp/sf10probe SPARK_GRAFT_CPUS=$(nproc) SPARK_GRAFT_ONLY=<q1>,<q2>,... sbt "runMain graft.Bench"   # Bench subset run
 
 RESULTS (warm run at 100x vs sf0.1 warm; note the interleaved tokens
 DOUBLE each doc's length, so the dedup family is really processing
