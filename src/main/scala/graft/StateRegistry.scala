@@ -36,15 +36,11 @@ object StateRegistry {
     * partitioning its final stage produced (on `keys`), so downstream
     * aggregations/joins clustered on `keys` stay partition-local —
     * the contract the graph queries' per-round aggregations need.
-    * The build runs with AQE partition coalescing disabled so the
-    * stamped `HashPartitioning` describes the true block layout.
     */
   def checkpointedHashPartitioned(owner: String, df: DataFrame,
       keys: Seq[String]): DataFrame = synchronized {
-    import org.apache.spark.sql.GraftColumnBridge
-    checkpointWith(owner, df, d =>
-      GraftColumnBridge.withStablePartitioning(d.sparkSession)(
-        GraftColumnBridge.localCheckpointHashPartitioned(d, keys)))
+    checkpointWith(owner, df,
+      org.apache.spark.sql.GraftColumnBridge.localCheckpointHashPartitioned(_, keys))
   }
 
   private def checkpointWith(owner: String, df: DataFrame,

@@ -31,14 +31,16 @@ object GraftColumnBridge {
     *
     * Caller contract: `df`'s final stage must really be
     * hash-partitioned by exactly `keys` (e.g. it ends in
-    * groupBy(keys).agg), and the caller must disable AQE partition
-    * coalescing for the build (coalesced buckets are a union of hash
-    * buckets, which `HashPartitioning(n)` would mis-describe) —
-    * [[withStablePartitioning]] wraps that conf dance.
+    * groupBy(keys).agg). The build runs on an [[isolated]] session
+    * with AQE partition coalescing off, so the layout is exactly
+    * `hash(keys) % spark.sql.shuffle.partitions` (a coalesced bucket
+    * is a union of hash buckets, which `HashPartitioning(n)` would
+    * mis-describe); the returned frame is bound to `df`'s session.
     */
   def localCheckpointHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val ck = df.localCheckpoint()
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val build = isolated(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val ck = onSession(build, df).localCheckpoint()
     ck.queryExecution.analyzed match {
       case lr: execution.LogicalRDD =>
         val keyAttrs = keys.map(k => lr.output.find(_.name == k).getOrElse(
@@ -51,24 +53,48 @@ object GraftColumnBridge {
         classic.Dataset.ofRows(spark,
           lr.copy(outputPartitioning = part)(
             spark, None, None))
-      case _ => ck
+      case _ => onSession(spark, ck)
     }
   }
 
-  /** Run `body` with AQE partition coalescing disabled: the layout of
-    * any shuffle it materializes is then exactly
-    * `hash(keys) % spark.sql.shuffle.partitions`, which is what
-    * [[localCheckpointHashPartitioned]] stamps.
+  private val clones =
+    scala.collection.mutable.Map.empty[(SparkSession, Seq[(String, String)]), SparkSession]
+
+  /** A session that runs with `conf` set, without touching `s`'s conf:
+    * `s` itself when it already holds every value, else a clone of `s`
+    * (`cloneSession`: same SparkContext and shared state, its own copy
+    * of the session conf and temp views). One clone
+    * per (session, values) is kept and reused — every session that
+    * starts a stream registers a `StreamingQueryListenerBus` on the
+    * shared `LiveListenerBus` and never removes it, so a clone per call
+    * would leak one listener per use. Before each use the clone is
+    * re-aligned with `s`: its conf is `s`'s current conf plus `conf`,
+    * and its streaming listeners are `s`'s, so a listener on `s` still
+    * sees the progress of a query started here. Never `stop()` or
+    * `close()` the result: that stops the shared SparkContext. Frames
+    * built on it are moved back to `s` with [[onSession]].
     */
-  def withStablePartitioning[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  def isolated(s: SparkSession, conf: (String, String)*): SparkSession =
+    if (conf.forall { case (k, v) => s.conf.getOption(k).contains(v) }) s
+    else synchronized {
+      val c = clones.getOrElseUpdate((s, conf.sorted),
+        s.asInstanceOf[classic.SparkSession].cloneSession())
+      val want = s.conf.getAll ++ conf
+      c.conf.getAll.keys.filterNot(want.contains).foreach(c.conf.unset)
+      want.foreach { case (k, v) => if (!c.conf.getOption(k).contains(v)) c.conf.set(k, v) }
+      val (mine, theirs) = (c.streams.listListeners().toSet, s.streams.listListeners().toSet)
+      (mine -- theirs).foreach(c.streams.removeListener)
+      (theirs -- mine).foreach(c.streams.addListener)
+      c
     }
-  }
+
+  /** `df`'s analyzed plan as a frame of session `s` (`df` itself when
+    * it already belongs to `s`): moves a result between a caller and
+    * its [[isolated]] session. */
+  def onSession(s: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq s) df
+    else classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
 
   /** A scalar subquery over `df`'s single-row/single-column result —
     * the construct Spark's own injected runtime join filters use to

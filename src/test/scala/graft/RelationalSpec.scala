@@ -23,12 +23,18 @@ class RelationalSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("all declared queries run and return rows at sf0.001") {
+    // Tables.load applies its two set-once reader confs on first load;
+    // after that, no query may change the shared session's conf.
+    sources.Tables.events(spark, sf)
+    sources.Tables.all.foreach(sources.Tables.load(spark, sf, _))
     // q9 can legitimately be tiny; everything else must be non-empty.
     SparkEntry.queries.foreach { case (name, fn) =>
+      val conf = spark.conf.getAll
       val df = fn(spark, sf)
       val n = df.count()
       assert(n >= 0, s"$name failed")
       if (name != "q9_anti_join") assert(n > 0, s"$name returned no rows")
+      assert(spark.conf.getAll == conf, s"$name changed the session conf")
     }
   }
 

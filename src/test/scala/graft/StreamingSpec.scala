@@ -430,6 +430,74 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.exists(_._2 > 1L))
   }
 
+  test("stateful drives run beside another streaming query without touching the session") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.ListenerBusAccess
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // an unrelated query stays active on the shared session throughout
+    val other = MemoryStream[Long]
+    other.addData(1L, 2L)
+    val bystander = other.toDF().writeStream.format("memory").queryName("bystander").start()
+    bystander.processAllAvailable()
+    val dataTriggers = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name != "bystander" && e.progress.numInputRows > 0)
+          dataTriggers.incrementAndGet()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val sc = spark.sparkContext
+    // Tables.load's set-once reader confs land on first load
+    sources.Tables.events(spark, sf)
+    sources.Tables.documents(spark, sf)
+    val confBefore = spark.conf.getAll
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    // one drive call: its rows, after checking the listener saw both epochs
+    def drive(f: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame) = {
+      dataTriggers.set(0)
+      val out = rows(f(spark, sf))
+      ListenerBusAccess.drain(sc)
+      assert(dataTriggers.get == 2, "the caller's listener must see both data triggers")
+      out
+    }
+    try {
+      val sess = drive(Streams.streamSessionStateful)
+      val probe = drive(Streams.streamNeardupProbe)
+      assert(sess == rows(Streams.sessionizeBatch(spark, sf)
+        .filter(pmod(col("user_id"), lit(7)) === 0)))
+      assert(probe == rows(Streams.streamNeardup(spark, sf)))
+      assert(sess.nonEmpty && probe.nonEmpty)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == confBefore("spark.sql.shuffle.partitions"))
+      assert(spark.conf.getAll == confBefore)
+      // the isolated session is reused, so repeat drives register no
+      // listener of their own on the shared bus. (Spark's stateful
+      // operators register one StreamingQueryListenerBus per query run,
+      // on the run's internal session; that one per run is the bound —
+      // a fresh isolated session per call would add a second.)
+      val iso = org.apache.spark.sql.GraftColumnBridge.isolated(spark,
+        "spark.sql.shuffle.partitions" -> "1")
+      assert(iso ne spark)
+      ListenerBusAccess.drain(sc)
+      val listeners = ListenerBusAccess.listenerCount(sc)
+      (1 to 2).foreach { _ =>
+        assert(drive(Streams.streamSessionStateful) == sess)
+        assert(drive(Streams.streamNeardupProbe) == probe)
+      }
+      assert(ListenerBusAccess.listenerCount(sc) <= listeners + 4)
+      assert(org.apache.spark.sql.GraftColumnBridge.isolated(spark,
+        "spark.sql.shuffle.partitions" -> "1") eq iso)
+      assert(bystander.isActive)
+    } finally {
+      spark.streams.removeListener(listener)
+      bystander.stop()
+      spark.catalog.dropTempView("bystander")
+    }
+  }
+
   test("crash-restart upsert sink converges to the clean drive's table") {
     // the injected mid-epoch crash (table written, offsets not
     // committed) plus a checkpoint restart must be indistinguishable
